@@ -37,13 +37,21 @@ from .textutil import (
 
 
 class TrieKB:
-    """Token-level trie; node 0 is the root (annotation.h:47-50)."""
+    """Token-level trie; node 0 is the root (annotation.h:47-50).
 
-    __slots__ = ("children", "types")
+    ``version`` counts calls to the mutating methods (``insert``,
+    ``mark_filtered``, ``remove``); the tagger's compile cache recompiles
+    when it moves. Mutate a trie only through those methods — a direct
+    edit of ``children``/``types`` is invisible to the cache. The trie is
+    weak-referenceable so its cache entry dies with it.
+    """
+
+    __slots__ = ("children", "types", "version", "__weakref__")
 
     def __init__(self) -> None:
         self.children: list[dict[str, int]] = [{}]
         self.types: list[set[str]] = [set()]
+        self.version = 0
 
     # --- accessors (annotation.h:24-45) ---------------------------------
     def get_child(self, u: int, token: str) -> int:
@@ -90,6 +98,7 @@ class TrieKB:
     ) -> None:
         """Mirrors `TrieForKB::insert` (annotation.h:99-138): raw form always,
         ALL-UPPER unless must_exactly_same, all-lower unless no_lowercases."""
+        self.version += 1
         u = self._descend_insert(tokens)
         self.types[u].update(types)
         if not must_exactly_same:
@@ -107,6 +116,7 @@ class TrieKB:
     ) -> None:
         """Mirrors `markAsFiltered` (annotation.h:52-97): same three forms,
         but FILTERED is only set on nodes that have no types yet."""
+        self.version += 1
         for form, enabled in (
             (tokens, True),
             ([ascii_upper(t) for t in tokens], not must_exactly_same),
@@ -121,6 +131,7 @@ class TrieKB:
     def remove(self, tokens: list[str]) -> None:
         """Mirrors `remove` (annotation.h:140-149): clear types of the exact
         path; no-op if the path doesn't exist."""
+        self.version += 1
         u = 0
         for tok in tokens:
             u = self.children[u].get(tok, -1)

@@ -4,13 +4,17 @@ Runs the reference's deterministic dictionary-match tagger
 (src/string_match.h:21-99 + src/annotation.h:267-317 span semantics) over an
 Iceberg/parquet transcripts table, Spark-first:
 
-* the KB trie is compiled to a nested-dict automaton on the driver and
-  **broadcast** once per job (the Spark analogue of the reference's single
-  shared in-memory trie, annotation.h:22);
+* the KB trie is compiled on the driver and **broadcast** — the Spark
+  analogue of the reference's single shared in-memory trie
+  (annotation.h:22). Both happen once per trie, not once per call: the
+  first ``tag_transcripts`` call on a ``TrieKB`` compiles it (lazily, so
+  building a trie stays cheap) and every later call, e.g. each bucket of
+  ``lineage.tag_resumable``, reuses the compiled form and its broadcast
+  (see ``compiled_broadcast`` for when they are rebuilt);
 * tagging is embarrassingly parallel over turns (a turn = a sentence; the
   reference's "\\n" sentinel barrier at string_match.h:35-37 becomes
-  structural), so it runs as ONE narrow `mapInPandas` stage — Arrow batches
-  in, Arrow batches out, no shuffle, no per-row Python UDF;
+  structural), so it runs as ONE narrow map stage — Arrow batches in,
+  Arrow batches out, no shuffle, no per-row Python UDF;
 * the inner DP is a from-scratch optimized implementation, deliberately
   independent from the readable oracle in ``autoner_spark.oracle`` so the
   pytest parity suite cross-checks two implementations (plus the compiled
@@ -25,11 +29,14 @@ shuffle; the tagger itself is partitioning-agnostic and deterministic per row.
 
 from __future__ import annotations
 
+import threading
+import weakref
 from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
 
+from pyspark import Broadcast, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     IntegerType,
@@ -38,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import tagvec
 from .dictionary import TrieKB
 from .textutil import (
     FILTERED_TYPE,
@@ -198,6 +206,63 @@ def tag_tokens_compiled(
     return out
 
 
+class _Compiled:
+    """A trie's compiled forms at one ``TrieKB.version``, by route
+    ("scalar": the nested-dict automaton of ``compile_trie``; "vec": the
+    array form of ``tagvec.compile_vec``), and each form's broadcast with
+    the SparkContext that made it."""
+
+    __slots__ = ("version", "values", "broadcasts")
+
+    def __init__(self, version: int) -> None:
+        self.version = version
+        self.values: dict[str, Any] = {}
+        self.broadcasts: dict[str, tuple[SparkContext, Broadcast]] = {}
+
+
+# one record per live trie; weak keys, so a record dies with its trie and a
+# recycled id() can never reach a dead trie's automaton
+_COMPILED: weakref.WeakKeyDictionary[TrieKB, _Compiled] = (
+    weakref.WeakKeyDictionary()
+)
+_COMPILED_LOCK = threading.Lock()
+
+
+def compiled_broadcast(sc: SparkContext, trie: TrieKB, route: str) -> Broadcast:
+    """The broadcast compiled form of ``trie`` for ``route`` ("scalar" or
+    "vec"), compiling and broadcasting only on a miss.
+
+    A form is compiled once per trie version: any ``insert`` /
+    ``mark_filtered`` / ``remove`` bumps ``trie.version`` and discards the
+    record. A broadcast is reused only on the live SparkContext that made
+    it; a stopped or replaced context gets a fresh broadcast of the kept
+    form. The vec route keeps only the array form (it reuses the nested
+    dicts when the scalar route already holds them, but never keeps them).
+    Compiles go through the module attributes ``compile_trie`` and
+    ``tagvec.compile_vec``, so wrapping either one sees every call.
+    """
+    with _COMPILED_LOCK:
+        rec = _COMPILED.get(trie)
+        if rec is None or rec.version != trie.version:
+            rec = _COMPILED[trie] = _Compiled(trie.version)
+        held = rec.broadcasts.get(route)
+        if held is not None and held[0] is sc and sc._jsc is not None:
+            return held[1]
+        value = rec.values.get(route)
+        if value is None:
+            if route == "vec":
+                nested = rec.values.get("scalar")
+                value = tagvec.compile_vec(
+                    compile_trie(trie) if nested is None else nested
+                )
+            else:
+                value = compile_trie(trie)
+            rec.values[route] = value
+        bc = sc.broadcast(value)
+        rec.broadcasts[route] = (sc, bc)
+        return bc
+
+
 def tag_transcripts(
     transcripts: DataFrame,
     trie: TrieKB,
@@ -208,23 +273,24 @@ def tag_transcripts(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, text, ...) -> mentions DataFrame.
 
-    One narrow mapInPandas stage over Arrow batches; the compiled trie is
-    broadcast. Column pruning: only (conv_id, turn_idx, text) plus any
-    ``passthrough`` columns are read, so a parquet/Iceberg scan prunes the
-    rest at the source. ``passthrough`` columns (e.g. ``ts`` for streaming
-    watermarks) are copied onto each emitted mention. Works on both batch
-    and streaming DataFrames (the stage is stateless).
+    One narrow map stage over Arrow batches. The trie is compiled on the
+    first call for it and broadcast once per SparkContext; later calls
+    with the same, unmutated trie reuse both (``compiled_broadcast``), and
+    a mutation through ``TrieKB.insert`` / ``mark_filtered`` / ``remove``
+    makes the next call recompile. Column pruning: only (conv_id,
+    turn_idx, text) plus any ``passthrough`` columns are read, so a
+    parquet/Iceberg scan prunes the rest at the source. ``passthrough``
+    columns (e.g. ``ts`` for streaming watermarks) are copied onto each
+    emitted mention. Works on both batch and streaming DataFrames (the
+    stage is stateless).
     """
-    spark = spark or transcripts.sparkSession
-    compiled = compile_trie(trie)
+    sc = (spark or transcripts.sparkSession).sparkContext
 
     if not passthrough and tokenizer == "whitespace":
         # hottest path: fully vectorized batch engine (Arrow + NumPy, no
         # per-token Python) — semantics pinned to tag_tokens_compiled by
         # tests/test_tagvec_parity.py and the oracle/binary parity suite
-        from . import tagvec
-
-        bc_vec = spark.sparkContext.broadcast(tagvec.compile_vec(compiled))
+        bc_vec = compiled_broadcast(sc, trie, "vec")
 
         def tag_arrow_vec(batches):
             vec = bc_vec.value
@@ -235,7 +301,7 @@ def tag_transcripts(
             tag_arrow_vec, MENTIONS_SCHEMA
         )
 
-    bc = spark.sparkContext.broadcast(compiled)
+    bc = compiled_broadcast(sc, trie, "scalar")
     tokenize = TOKENIZERS[tokenizer]
 
     if not passthrough:

@@ -24,9 +24,12 @@ Parity with the scalar path is pinned by tests/test_tagvec_parity.py (and
 transitively by the oracle/binary parity suite, which runs the Spark tagger
 through this engine).
 
-Scale note: everything here is per-batch, executor-side, allocation bounded
-by the Arrow batch size; the only task-lifetime state is the compiled
-transition table (built once per broadcast value).
+Scale note: everything here is per-batch and executor-side. The trie walk
+is bounded by the batch's token count, but the DP tables (``f``, ``tb_d``,
+``tb_idx``) are rows x maxlen of the batch, so one very long turn inflates
+them for every row it is batched with; a batch whose DP group key would
+overflow int32 raises ``ValueError``. The only task-lifetime state is the
+compiled transition table (built once per broadcast value).
 """
 
 from __future__ import annotations
@@ -271,12 +274,27 @@ def _dp_segments(
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy(), e.copy()
 
+    D = int(m_d.max()) if m_d.size else 1
+    # group matches by (end column, depth ASC) — one narrow int32 key
+    # argsort (radix path); end and d are recovered from the key, and the
+    # traceback carries the MATCH INDEX so kind/ts are never permuted.
+    # The depth field is sized from D (a fixed 3-bit field silently
+    # corrupted groups for dictionaries with >7-token surfaces — BC5CDR).
+    # Every key is below (maxlen + 1) << shift; a batch whose keys would not
+    # fit int32 is refused here, before any per-column or per-cell table
+    # is allocated, instead of wrapping.
+    shift = max(D, 1).bit_length()
+    if (maxlen + 1) << shift > 2**31:
+        raise ValueError(
+            f"turn of {maxlen} tokens with {D}-token matches overflows the "
+            "int32 DP group key"
+        )
+
     # active rows at column c: lens >= c (sorted desc -> a prefix);
     # k_col[c-1] = #rows with len >= c
     asc = lens[::-1]
     k_col = n - np.searchsorted(asc, np.arange(1, maxlen + 1), side="left")
 
-    D = int(m_d.max()) if m_d.size else 1
     if all(
         (weight * d) * d == float(d * d) for d in range(1, D + 1)
     ):
@@ -290,12 +308,6 @@ def _dp_segments(
             (weight * m_d) * m_d,
         )
 
-    # group matches by (end column, depth ASC) — one narrow int32 key
-    # argsort (radix path); end and d are recovered from the key, and the
-    # traceback carries the MATCH INDEX so kind/ts are never permuted.
-    # The depth field is sized from D (a fixed 3-bit field silently
-    # corrupted groups for dictionaries with >7-token surfaces — BC5CDR).
-    shift = max(D, 1).bit_length()
     mult = np.int64(1 << shift)
     mask = np.int32((1 << shift) - 1)
     m_end = m_i + m_d

@@ -212,6 +212,24 @@ def test_has_type_set_semantics(spark, kg):
     assert types == {"Object", "Operator"}
 
 
+def test_null_typed_mention_keeps_mentioned_in(spark):
+    """A NULL entity_type drops only the has_type triples: the mention's
+    mentioned_in triple survives (concat with a NULL array would lose it)."""
+    from autoner_spark.triples import explode_triple_pairs
+
+    m = spark.createDataFrame(
+        [("ent:a", "Object,Operator", "c1", 0), ("ent:b", None, "c1", 1)],
+        "subj string, entity_type string, conv_id string, turn_idx int",
+    )
+    got = sorted(tuple(r) for r in explode_triple_pairs(m).collect())
+    assert got == [
+        ("ent:a", "has_type", "Object", "c1", 0),
+        ("ent:a", "has_type", "Operator", "c1", 0),
+        ("ent:a", "mentioned_in", "c1#0", "c1", 0),
+        ("ent:b", "mentioned_in", "c1#1", "c1", 1),
+    ]
+
+
 def test_span_prf_self_is_one(spark, kg):
     result, _ = kg
     m = result["mentions"]

@@ -371,6 +371,25 @@ def test_guard_drop_stats_nonzero_on_skew(spark):
     assert zst.n_dropped_groups == 0 and zst.n_dropped_rows == 0
 
 
+def test_ngram_drop_stats_honours_id_unique(spark):
+    """Duplicated doc_ids: id_unique=False counts each (id, shingle) once,
+    as ngram_jaccard_pairs(id_unique=False) groups them; the default counts
+    every row's shingles."""
+    from autoner_spark.dedup import ngram_jaccard_drop_stats
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (1, "a b c d"), (2, "a b c x")],
+        "doc_id long, text string",
+    )
+    per_row = ngram_jaccard_drop_stats(docs, n=3, max_shingle_df=1).collect()[0]
+    # "a b c" x3 and "b c d" x2 exceed the cap
+    assert (per_row.n_dropped_groups, per_row.n_dropped_rows) == (2, 5)
+    per_id = ngram_jaccard_drop_stats(
+        docs, n=3, max_shingle_df=1, id_unique=False).collect()[0]
+    # distinct (id, shingle): only "a b c" (ids 1 and 2) exceeds the cap
+    assert (per_id.n_dropped_groups, per_id.n_dropped_rows) == (1, 2)
+
+
 def test_ivf_multiprobe_improves_boundary_recall(spark, emb):
     """nprobe>1 must strictly improve recall@k vs nprobe=1 on the isotropic
     fixture (queries near cluster boundaries lose their true neighbors when

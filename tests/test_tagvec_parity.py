@@ -174,3 +174,31 @@ def test_parity_deep_surfaces(force_sparse):
     b = vec_tag(rows, vec, 1.0)
     assert a == b
     assert any(m[3] - m[2] >= 9 for m in a), "deep surfaces must match"
+
+
+def test_dp_group_key_overflow_raises_before_allocating():
+    """A 2**25-token turn with a 63-token match needs (2**25 + 1) * 64 > 2**31
+    DP group keys: _dp_segments must refuse it instead of wrapping the int32
+    key, and before it allocates any rows x maxlen table (f alone would be
+    256 MiB here)."""
+    import tracemalloc
+
+    import numpy as np
+
+    from autoner_spark.tagvec import _dp_segments
+
+    n_tok, depth = 2**25, 63
+    one = np.zeros(1, dtype=np.int64)
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="int32"):
+            _dp_segments(
+                counts=np.array([n_tok], dtype=np.int64),
+                m_row=one, m_i=one + (n_tok - depth), m_d=one + depth,
+                m_kind=np.ones(1, dtype=np.int8), m_ts=one + 1,
+                order=one, weight=1.0,
+            )
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
